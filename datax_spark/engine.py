@@ -568,10 +568,14 @@ class CDCEngine:
         # decided ONCE here before the stream starts: with a fresh
         # checkpoint the epoch counter restarts at 0, so legacy ids
         # from some OLD stream would match the new stream's first
-        # epochs and silently drop genuinely new data. A checkpoint
-        # directory that does not exist yet cannot be a legacy resume.
+        # epochs and silently drop genuinely new data. A checkpoint is
+        # resumed only when Structured Streaming has written its
+        # offsets/ log there — a missing or bare pre-created directory
+        # is fresh.
         ckpt_tag = _checkpoint_tag(checkpoint_dir)
-        legacy_ok = accept_legacy_batch_ids and os.path.isdir(checkpoint_dir)
+        legacy_ok = accept_legacy_batch_ids and os.path.isdir(
+            os.path.join(_normalize_source_path(checkpoint_dir), "offsets")
+        )
         if accept_legacy_batch_ids and not legacy_ok:
             import warnings
 

@@ -76,6 +76,15 @@ def tombstone_migration_sql(identifier: str) -> str:
     return f"ALTER TABLE {identifier} ADD COLUMN `_tombstone` boolean"
 
 
+def _procedure_ns(identifier: str) -> str:
+    """Namespace of an Iceberg stored procedure for a table: the
+    table's own catalog for a 3-part `catalog.db.table`, the session
+    catalog's bare `system` for a 2-part `db.table` (whose first part
+    is a database, not a catalog)."""
+    parts = identifier.split(".")
+    return f"{parts[0]}.system" if len(parts) >= 3 else "system"
+
+
 def compact_sql(identifier: str, target_file_size_bytes: int | None = None) -> str:
     """The cluster twin of SnapshotTable.compact_buckets: Iceberg's
     rewrite_data_files procedure bin-packs the merge-on-read delta
@@ -83,14 +92,13 @@ def compact_sql(identifier: str, target_file_size_bytes: int | None = None) -> s
     see create_table_sql) back into full-size base files, bounding
     read amplification exactly as the sandbox backend's bucket
     compaction does. Run on the maintenance cadence, not per batch."""
-    catalog, _, _ = identifier.partition(".")
     opts = f"table => '{identifier}'"
     if target_file_size_bytes is not None:
         opts += (
             ", options => map('target-file-size-bytes', "
             f"'{int(target_file_size_bytes)}')"
         )
-    return f"CALL {catalog}.system.rewrite_data_files({opts})"
+    return f"CALL {_procedure_ns(identifier)}.rewrite_data_files({opts})"
 
 
 def expire_snapshots_sql(identifier: str, older_than: str) -> str:
@@ -98,9 +106,8 @@ def expire_snapshots_sql(identifier: str, older_than: str) -> str:
     IcebergTable.expire_snapshots, which compacts the batch-id ledger
     first (per-snapshot summaries carry ledger DELTAS; expiring them
     un-compacted would break exactly-once)."""
-    catalog, _, _ = identifier.partition(".")
     return (
-        f"CALL {catalog}.system.expire_snapshots("
+        f"CALL {_procedure_ns(identifier)}.expire_snapshots("
         f"table => '{identifier}', older_than => TIMESTAMP '{older_than}')"
     )
 

@@ -44,8 +44,13 @@ same semantics live behind this small backend:
     history pruning never weakens exactly-once, retention proofs, or
     the watermark. Batch ids whose WAL segments are retired are past
     the replay low-watermark and prunable via compact_ledger(prune=…).
-  * reads: latest (or time-travel) snapshot, each data dir aligned to
-    the current schema (add/drop/retype evolution without rewrite).
+  * reads: latest (or time-travel) snapshot. Dirs written under the
+    commit's own schema version are read with that schema given (the
+    commit schema + _lsn + _tombstone), so planning a read runs no
+    Spark job; older-version dirs are inferred and aligned to it
+    (add/drop/retype evolution without rewrite). A null _tombstone
+    (a pre-tombstone file) reads as live. Point lookups hash their
+    key to its bucket on the driver (driver_bucket).
 
 MERGE itself is pure DataFrame code: group-by key with `max_by` over
 (lsn, source-priority) — last-writer-wins with map-side partial
@@ -60,7 +65,7 @@ import json
 import os
 import uuid
 from dataclasses import dataclass
-from typing import Iterable
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -94,6 +99,75 @@ def bucket_expr(key_cols: list[str], num_buckets: int):
     """Stable hash bucket of the key. On real Iceberg this is the
     bucket(N, key) partition transform; here Spark's Murmur3 hash."""
     return F.pmod(F.hash(*[F.col(c) for c in key_cols]), F.lit(num_buckets)).cast("int")
+
+
+# Driver-side twin of bucket_expr: a pure-Python port of Spark's
+# Murmur3Hash (Murmur3_x86_32 as `hash()` runs it — seed 42, chained
+# across columns, nulls skipped, strings hashed over their UTF-8 bytes
+# with Spark's per-byte tail). Lets a point lookup pick its bucket
+# without a one-row Spark job; pinned equal to bucket_expr by a
+# hypothesis property.
+_M32 = 0xFFFFFFFF
+
+
+def _rotl32(x: int, r: int) -> int:
+    return ((x << r) | (x >> (32 - r))) & _M32
+
+
+def _mix_k1(k1: int) -> int:
+    return (_rotl32((k1 * 0xCC9E2D51) & _M32, 15) * 0x1B873593) & _M32
+
+
+def _mix_h1(h1: int, k1: int) -> int:
+    return (_rotl32(h1 ^ k1, 13) * 5 + 0xE6546B64) & _M32
+
+
+def _fmix(h1: int, length: int) -> int:
+    h1 ^= length
+    h1 ^= h1 >> 16
+    h1 = (h1 * 0x85EBCA6B) & _M32
+    h1 ^= h1 >> 13
+    h1 = (h1 * 0xC2B2AE35) & _M32
+    return h1 ^ (h1 >> 16)
+
+
+_INT_BITS = {T.IntegerType(): 32, T.LongType(): 64}
+
+
+def _murmur3(value, dtype: T.DataType, seed: int) -> int | None:
+    """Spark's Murmur3 of one non-null value as an unsigned 32-bit int,
+    or None when the port does not cover it."""
+    if dtype == T.StringType() and isinstance(value, str):
+        data = value.encode("utf-8")
+        aligned = len(data) - len(data) % 4
+        h1 = seed
+        for i in range(0, aligned, 4):
+            h1 = _mix_h1(h1, _mix_k1(int.from_bytes(data[i:i + 4], "little")))
+        for b in data[aligned:]:  # tail bytes one at a time, sign-extended
+            h1 = _mix_h1(h1, _mix_k1((b - 256 if b > 127 else b) & _M32))
+        return _fmix(h1, len(data))
+    bits = _INT_BITS.get(dtype)
+    if bits is None or type(value) is not int or not -(1 << bits - 1) <= value < 1 << bits - 1:
+        return None
+    h1 = _mix_h1(seed, _mix_k1(value & _M32))
+    if bits == 64:
+        h1 = _mix_h1(h1, _mix_k1((value >> 32) & _M32))
+    return _fmix(h1, bits // 8)
+
+
+def driver_bucket(values: list, types: list[T.DataType], num_buckets: int) -> int | None:
+    """bucket_expr evaluated on the driver for one key: `values` are the
+    key's column values, `types` the table's column types. None when a
+    value is outside the port (a type other than string/int/long, or a
+    Python value Spark would first have to cast) — the caller then asks
+    Spark."""
+    h = 42
+    for v, t in zip(values, types):
+        if v is not None:
+            h = _murmur3(v, t, h)
+            if h is None:
+                return None
+    return (h - (1 << 32) if h & 0x80000000 else h) % num_buckets
 
 
 @dataclass
@@ -446,11 +520,17 @@ class SnapshotTable:
         job-spec snapshotwriter, dedup indexes all call this): fold
         ONLY the buckets whose MOR delta count reached `threshold`.
         Returns the compaction's CommitInfo, or None when no bucket is
-        hot. One place to evolve the policy."""
+        hot or the compaction lost a commit race. Losing is harmless:
+        compaction changes layout, not content, and the callers' merge
+        has already committed — the deltas stay for the next check.
+        One place to evolve the policy."""
         hot = [b for b, n in self.delta_counts().items() if n >= threshold]
         if not hot:
             return None
-        return self.compact_buckets(buckets=hot)
+        try:
+            return self.compact_buckets(buckets=hot)
+        except ConcurrentCommitError:
+            return None
 
     def delta_counts(self) -> dict[int, int]:
         """Bucket → live MOR delta-file-set count in the current
@@ -694,8 +774,14 @@ class SnapshotTable:
         # schema, so they batch into a single multi-path scan (a
         # 64-bucket table is 1 scan, not 64 unioned scans — the
         # difference between O(1) and O(buckets) planning per batch).
-        # Dirs written under older schema versions are aligned on read
-        # — schema evolution without rewriting files.
+        # Dirs tagged with the commit's own schema version were written
+        # with exactly `full` (every writer tags cur["schema_version"]),
+        # so they are read with that schema given: no footer-inference
+        # job, no projection — the read plans without running Spark.
+        # A null _tombstone (a pre-tombstone file) reads as live: every
+        # consumer coalesces it to false. Dirs written under older
+        # schema versions (or legacy -1) are inferred and aligned on
+        # read — schema evolution without rewriting files.
         by_ver: dict[int, list[str]] = {}
         needs_fold = False
         for _b, entry in items:
@@ -707,7 +793,10 @@ class SnapshotTable:
             for d, sv in psets:
                 by_ver.setdefault(sv, []).append(os.path.join(self.location, d))
         parts = []
-        for _sv, paths in sorted(by_ver.items()):
+        for sv, paths in sorted(by_ver.items()):
+            if sv == commit.get("schema_version"):
+                parts.append(self.spark.read.schema(full).parquet(*paths))
+                continue
             raw = self.spark.read.parquet(*paths)
             aligned = align_to_schema(raw, schema, keep=[LSN_COL, TOMBSTONE_COL])
             if TOMBSTONE_COL not in aligned.columns:  # pre-tombstone files
@@ -746,7 +835,8 @@ class SnapshotTable:
         """Current (or time-travel) table state. Tombstone rows (delete
         markers retained so late out-of-order redeliveries of OLDER
         updates cannot resurrect a deleted key) are internal: filtered
-        out here unless include_meta."""
+        out here unless include_meta. With include_meta, a null
+        _tombstone (a pre-tombstone file) means live."""
         commit = self.current() if version is None else self._read_commit(version)
         df = self._read_manifest(commit)
         if include_meta:
@@ -842,6 +932,31 @@ class SnapshotTable:
         )
         return df.join(kd, on=key_cols, how="left_semi")
 
+    def _key_buckets(
+        self, cur: dict, keys: list[dict], key_df: Callable[[], DataFrame]
+    ) -> list[int]:
+        """Sorted distinct buckets of full-key dicts, hashed on the
+        driver (driver_bucket) with no Spark job. When some key is
+        outside the port, ONE Spark job evaluates bucket_expr over
+        `key_df()` — the keys typed as the TABLE's columns (Murmur3
+        hashes IntegerType and LongType differently, so an int literal
+        against a long-keyed table would hash to the wrong bucket and
+        silently return nothing)."""
+        schema = T.StructType.fromJson(cur["schema"])
+        types = [schema[c].dataType for c in cur["key_cols"]]
+        buckets = {
+            driver_bucket([k[c] for c in cur["key_cols"]], types, cur["num_buckets"])
+            for k in keys
+        }
+        if None not in buckets:
+            return sorted(buckets)
+        return sorted(
+            r["b"]
+            for r in key_df().select(
+                bucket_expr(cur["key_cols"], cur["num_buckets"]).alias("b")
+            ).distinct().collect()
+        )
+
     def lookup(self, key: dict) -> DataFrame:
         """Point lookup by full primary key: hashes the key to its
         bucket and scans ONLY that bucket's files — 1/num_buckets of
@@ -852,23 +967,18 @@ class SnapshotTable:
         key_cols = cur["key_cols"]
         if set(key) != set(key_cols):
             raise ValueError(f"lookup needs the full key {key_cols}, got {sorted(key)}")
-        # Cast each literal to the TABLE's column type before hashing:
-        # Murmur3 hashes IntegerType and LongType differently, so an
-        # int literal against a long-keyed table would hash to the
-        # wrong bucket and silently return nothing.
         schema = T.StructType.fromJson(cur["schema"])
         typed = {c: F.lit(key[c]).cast(schema[c].dataType) for c in key_cols}
-        row = self.spark.range(1).select(
-            *[typed[c].alias(c) for c in key_cols]
-        ).select(bucket_expr(key_cols, cur["num_buckets"]).alias("b")).collect()
-        bucket = row[0]["b"]
+        buckets = self._key_buckets(
+            cur, [key], lambda: self.spark.range(1).select(*[typed[c].alias(c) for c in key_cols])
+        )
         df = (
-            self._read_manifest(cur, buckets=[bucket])
+            self._read_manifest(cur, buckets=buckets)
             .filter(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)))
             .drop(LSN_COL, TOMBSTONE_COL)
         )
         for c in key_cols:
-            df = df.filter(F.col(c) == F.lit(key[c]).cast(schema[c].dataType))
+            df = df.filter(F.col(c) == typed[c])
         return df
 
     def lookup_many(self, keys: list[dict]) -> DataFrame:
@@ -885,24 +995,17 @@ class SnapshotTable:
         for key in keys:
             if set(key) != set(key_cols):
                 raise ValueError(f"lookup needs the full key {key_cols}, got {sorted(key)}")
+        schema = T.StructType.fromJson(cur["schema"])
         if not keys:
-            schema = T.StructType.fromJson(cur["schema"])
             return self.spark.range(0).select(
                 *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
             )
-        schema = T.StructType.fromJson(cur["schema"])
         key_df = self.spark.createDataFrame(
             [tuple(k[c] for c in key_cols) for k in keys],
             T.StructType([schema[c] for c in key_cols]),
         )
-        buckets = sorted(
-            r["b"]
-            for r in key_df.select(
-                bucket_expr(key_cols, cur["num_buckets"]).alias("b")
-            ).distinct().collect()
-        )
         df = (
-            self._read_manifest(cur, buckets=buckets)
+            self._read_manifest(cur, buckets=self._key_buckets(cur, keys, lambda: key_df))
             .filter(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)))
             .drop(LSN_COL, TOMBSTONE_COL)
         )

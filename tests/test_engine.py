@@ -728,13 +728,15 @@ def test_legacy_stream_batch_ids_accepted_on_resume(spark, wal_fixture, tmp_path
     v_before = t.current()["version"]
 
     # resume of an EXISTING checkpoint with the legacy flag: every
-    # epoch skips. (The dir is pre-created to model the real legacy
-    # scenario — a pre-r4 checkpoint on disk; against a genuinely
-    # fresh checkpoint the flag is ignored, see the guard test below.)
-    os.makedirs(ckpt, exist_ok=True)
+    # epoch skips. (Its offsets/ log is pre-created to model the real
+    # legacy scenario — a pre-r4 checkpoint on disk; against a
+    # genuinely fresh checkpoint the flag is ignored, see the guard
+    # tests below.) The path is given as a file: URI, which the
+    # resume check must strip to find offsets/.
+    os.makedirs(os.path.join(ckpt, "offsets"), exist_ok=True)
     seen = []
     q = engine.run_stream(
-        wal_fixture.wal_dir, ckpt, max_files_per_trigger=1,
+        wal_fixture.wal_dir, "file://" + ckpt, max_files_per_trigger=1,
         accept_legacy_batch_ids=True,
         on_batch=lambda ci, e: seen.append(ci.skipped),
     )
@@ -747,9 +749,11 @@ def test_legacy_stream_batch_ids_accepted_on_resume(spark, wal_fixture, tmp_path
     # IGNORED with a warning — epoch ids restart at 0 there, so legacy
     # ids from an old stream would match the new stream's first epochs
     # and silently drop genuinely new data. Batches must APPLY (they
-    # commit under new-format ids; content stays correct via LWW).
+    # commit under new-format ids; content stays correct via LWW). A
+    # bare pre-created directory (no offsets/ log) is still fresh.
     import warnings as _warnings
 
+    os.makedirs(str(tmp_path / "ckpt_fresh"))
     seen2 = []
     with _warnings.catch_warnings(record=True) as caught:
         _warnings.simplefilter("always")

@@ -163,6 +163,27 @@ def test_compact_sql_golden():
     )
 
 
+def test_procedure_sql_two_part_identifier_uses_session_catalog():
+    """A 2-part `db.table` names no catalog: the procedure call must be
+    the catalog-less `CALL system.<proc>` form, not `CALL db.system`.
+    3-part identifiers keep their catalog prefix."""
+    from datax_spark.iceberg import compact_sql, expire_snapshots_sql
+
+    assert compact_sql("db.src") == (
+        "CALL system.rewrite_data_files(table => 'db.src')"
+    )
+    assert compact_sql("db.src", target_file_size_bytes=1024) == (
+        "CALL system.rewrite_data_files(table => 'db.src', "
+        "options => map('target-file-size-bytes', '1024'))"
+    )
+    assert expire_snapshots_sql("db.src", "2026-01-01 00:00:00") == (
+        "CALL system.expire_snapshots(table => 'db.src', "
+        "older_than => TIMESTAMP '2026-01-01 00:00:00')"
+    )
+    assert compact_sql("cat.db.src").startswith("CALL cat.system.")
+    assert expire_snapshots_sql("cat.db.src", "x").startswith("CALL cat.system.")
+
+
 def test_expire_snapshots_sql_golden_and_ledger_guard():
     """Expiry must flow through the ledger guard: the SQL builder is
     golden-pinned, and IcebergTable.expire_snapshots compacts the

@@ -357,6 +357,53 @@ def test_compaction_loses_race_to_concurrent_mor_writer(spark, tmp_path):
     assert any(d for d in t2.vacuum())
 
 
+def test_inline_compaction_losing_race_keeps_merge(spark, wal_fixture, tmp_path):
+    """Inline compaction is opportunistic: when a rival commit lands
+    between the batch's merge and its compaction, apply_batch must
+    still return the merge's commit (not raise after it committed),
+    the batch id is in the ledger exactly once, and the next threshold
+    check compacts."""
+    from datax_spark.engine import CDCEngine
+    from datax_spark.schema_evolution import EpochRegistry
+
+    reg = EpochRegistry.from_json(wal_fixture.schema_epochs_path)
+    loc = str(tmp_path / "t")
+    t = SnapshotTable.create(spark, loc, reg.schema_for(0),
+                             key_cols=reg.key_cols, num_buckets=1)
+    thr = 2
+    engine = CDCEngine(spark, t, reg, merge_strategy="mor", mor_compact_threshold=thr)
+    segs = sorted(
+        os.path.join(wal_fixture.wal_dir, f)
+        for f in os.listdir(wal_fixture.wal_dir)
+        if f.endswith(".parquet")
+    )
+    engine.apply_batch(spark.read.parquet(segs[0]), batch_id="s0")
+
+    rival = SnapshotTable.load(spark, loc)
+    orig = t._write_commit
+    raced = []
+
+    def racing_write(version, record):
+        if "compact_buckets" in record["metrics"] and not raced:
+            raced.append(rival.compact_ledger().version)
+        return orig(version, record)
+
+    t._write_commit = racing_write
+    ci = engine.apply_batch(spark.read.parquet(segs[1]), batch_id="s1")
+    t._write_commit = orig
+    assert raced, "the compaction never reached its commit"
+    assert not ci.skipped and ci.batch_id == "s1"
+    assert t._read_commit(ci.version)["batch_id"] == "s1"
+    assert ci.version < raced[0] == t.current()["version"]  # rival won
+    assert t.delta_counts()[0] >= thr  # the lost compaction left its deltas
+    assert [c["version"] for c in t.history() if c["batch_id"] == "s1"] == [ci.version]
+    assert "s1" in t.committed_batch_ids()
+
+    engine.apply_batch(spark.read.parquet(segs[2]), batch_id="s2")
+    assert t.current()["metrics"].get("compact_buckets") == [0]
+    assert t.delta_counts() == {}
+
+
 from hypothesis import given, settings, strategies as st
 
 
